@@ -309,7 +309,9 @@ def kmeans_centroids_train(
     lineage (standard for iterative algorithms; without it, iteration i
     re-evaluates all prior iterations). Empty clusters drop out
     (classic Lloyd behavior), so the result may have < k rows.
-    Returns (cluster, cv) with cv an array<double> centroid.
+    Returns (cluster, centroid) with centroid an array<double> — the
+    frame shape :func:`ivf_topk`, :func:`ivf_index_build` and
+    ``streaming.annindex.IvfIndexSink`` read.
     """
     c = corpus.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("_v"))
     w0 = Window.orderBy(id_col)
@@ -350,7 +352,7 @@ def kmeans_centroids_train(
             )
             .localCheckpoint()
         )
-    return centroids
+    return centroids.withColumnRenamed("cv", "centroid")
 
 
 def ivf_topk(
@@ -578,7 +580,8 @@ def semantic_dedup(
     cents = kmeans_centroids_train(df, k=k, iters=iters,
                                    id_col=id_col, vec_col=vec_col)
     v = df.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("_v"))
-    assign = ivf_assign(v, cents, id_col, n_probe=1)
+    assign = ivf_assign(v, cents, id_col, centroid_vec_col="centroid",
+                        n_probe=1)
     x = assign.join(v, id_col)
     a = x.select(
         F.col(id_col).alias("_ida"), F.col("cluster"), F.col("_v").alias("_va")

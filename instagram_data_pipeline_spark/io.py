@@ -14,6 +14,9 @@ Scale notes (100 TB):
   tables are append-only + compaction — the upsert protocols in
   ``operators/writes.py`` are designed so the *per-batch* work is an
   anti-join against only the touched partitions.
+* Merged tables (``Warehouse.upsert_partitioned``) have one backend,
+  :class:`~.formats.TransactionLogFormat`: bucket-scoped rewrites
+  published by one crash-atomic manifest commit.
 """
 
 from __future__ import annotations
@@ -296,18 +299,19 @@ class Warehouse:
 
     Mirrors ``database/setup.py:27-127``: ``ensure_tables`` is the
     idempotent DDL analog (creates empty tables that don't exist yet).
+    Merged tables (``upsert_partitioned`` / ``read_merged``) live on
+    the transaction log held in ``fmt``.
     """
 
     def __init__(self, spark: SparkSession, root: str, fmt=None):
-        from .formats import ParquetPartitionedFormat
+        from .formats import TransactionLogFormat
 
         self.spark = spark
         self.root = Path(root)
-        # table-format seam (SURVEY §7 risk 1): the A1 MERGE path
-        # delegates to a TableFormat so a transactional backend
-        # (formats.TransactionLogFormat, or real Delta/Iceberg) replaces
-        # the plain-parquet emulation without touching callers
-        self.fmt = fmt or ParquetPartitionedFormat()
+        # the A1 MERGE path commits through the transaction log; pass a
+        # configured TransactionLogFormat (clustering, blooms) to change
+        # its layout
+        self.fmt = fmt or TransactionLogFormat()
 
     def path(self, table: str) -> str:
         return str(self.root / table)
@@ -372,9 +376,7 @@ class Warehouse:
             if self.exists(name):
                 self.read(name).createOrReplaceTempView(name)
 
-    # -- A1 at scale: partition-scoped MERGE on plain parquet -------------
-    BUCKET_COL = "_kb"
-
+    # -- A1 at scale: bucket-scoped MERGE on the transaction log --------
     def upsert_partitioned(
         self,
         table: str,
@@ -384,157 +386,30 @@ class Warehouse:
         num_buckets: int = 64,
         txn: tuple[str, int] | None = None,
     ) -> None:
-        """Partition-scoped upsert-keep-newest: the A1 MERGE.
+        """Bucket-scoped upsert-keep-newest: the A1 MERGE.
 
         The incoming batch's keys hash to ``num_buckets`` buckets, so
         the slices the batch touches are computable from the batch
         alone: only those are read, merged via ``upsert_keep_newest``,
         and rewritten — a batch touching b buckets costs b/num_buckets
         of the table instead of all of it, which is what makes
-        per-batch merges viable at 100 TB.
+        per-batch merges viable at 100 TB. The commit is one versioned
+        manifest publish on this Warehouse's
+        :class:`~.formats.TransactionLogFormat` (crash-atomic,
+        Delta/Iceberg-style).
 
-        Delegates to the :class:`~.formats.TableFormat` this Warehouse
-        was built with: the default parquet backend rewrites bucket
-        partitions in place (atomic w.r.t. the plan's own reads, NOT
-        crash-atomic); ``formats.TransactionLogFormat`` commits the same
-        merge through a versioned manifest with one atomic rename
-        (crash-atomic, Delta/Iceberg-style). Same signature, same
-        semantics, same tests — pick per deployment.
-
-        ``txn=(app_id, version)`` makes the merge IDEMPOTENT on the
-        transaction-log backend (the Delta txnAppId/txnVersion
-        design): a merge whose version is <= the app's last recorded
-        version is a silent no-op — exactly what a foreachBatch
-        streaming sink passes (query_id, batch_id) to get
+        ``txn=(app_id, version)`` makes the merge IDEMPOTENT (the Delta
+        txnAppId/txnVersion design): a merge whose version is <= the
+        app's last recorded version is a silent no-op — exactly what a
+        foreachBatch streaming sink passes (query_id, batch_id) to get
         exactly-once MERGE semantics under Spark's replay-on-failure
-        contract. The plain-parquet backend has no manifest to record
-        transactions in and rejects the option.
+        contract.
         """
-        if txn is not None:
-            self.fmt.merge(
-                self, table, incoming, keys, order_col, num_buckets,
-                txn=txn,
-            )
-        else:
-            self.fmt.merge(
-                self, table, incoming, keys, order_col, num_buckets
-            )
-
-    def overwrite_partitions(
-        self, table: str, df: DataFrame, part_col: str
-    ) -> None:
-        """Two-phase dynamic-partition overwrite: stage ``df`` to a tmp
-        path (the final overwrite would otherwise delete the files the
-        plan is reading), then rewrite ONLY the partitions present in
-        ``df`` — untouched partition directories are left as-is.
-
-        NOT crash-atomic: a failure between the staged write and the
-        final overwrite, or mid-overwrite, can leave some touched
-        partitions rewritten and others stale. Plain Parquet has no
-        multi-file commit protocol; Delta/Iceberg MERGE is the
-        transactional form. Cleanup goes through the Hadoop FileSystem
-        API so the tmp path may live on any supported FS, not just the
-        local disk.
-        """
-        tmp = self.path(table) + ".merge.tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.parquet(tmp)
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        self.fmt.merge(
+            self, table, incoming, keys, order_col, num_buckets, txn=txn
         )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            staged.write.mode("overwrite").partitionBy(part_col).parquet(
-                self.path(table)
-            )
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
-        try:
-            hadoop_rm(self.spark, tmp)
-        except Exception:
-            pass
 
     def read_merged(self, table: str) -> DataFrame:
-        """Read a table maintained by ``upsert_partitioned`` without the
-        internal bucket column (format-dispatched)."""
+        """Read the latest version of a table maintained by
+        ``upsert_partitioned``."""
         return self.fmt.read_merged(self, table)
-
-    def partition_file_counts(self, table: str, part_col: str) -> dict:
-        """{partition_value(str): n_parquet_files} via the Hadoop
-        FileSystem API (works on HDFS/S3A/local alike). Driver-side cost
-        is one listing per partition directory — the same metadata walk
-        the parquet reader performs, bounded by partition count."""
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(self.path(table))
-        fs = path.getFileSystem(conf)
-        counts: dict[str, int] = {}
-        if not fs.exists(path):
-            return counts
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{part_col}=")):
-                continue
-            n = sum(
-                1
-                for f in fs.listStatus(st.getPath())
-                if f.getPath().getName().endswith(".parquet")
-            )
-            counts[name.split("=", 1)[1]] = n
-        return counts
-
-    def compact_partitions(
-        self,
-        table: str,
-        part_col: str | None = None,
-        target_files: int = 1,
-    ) -> list[str]:
-        """Small-file compaction: rewrite only the partitions whose
-        parquet file count exceeds ``target_files``, to exactly
-        ``target_files`` files each. Returns the partition values
-        compacted.
-
-        Repeated partition-scoped upserts leave each touched partition
-        with one file per merge — at 100 TB the scan cost becomes
-        metadata/open-bound long before data-bound. The fix is the
-        standard maintenance pass every table format ships (Delta
-        OPTIMIZE / Iceberg rewrite_data_files), expressed on plain
-        parquet:
-
-        * the partition->file-count map comes from the FileSystem API
-          (no data read);
-        * only oversized partitions are READ (partition pruning) and
-          rewritten, via ``repartition(part_col, salt)`` where the salt
-          is a key hash mod ``target_files`` — each (partition, salt)
-          group is one task, so each partition lands in exactly
-          ``target_files`` files;
-        * the rewrite goes through the same staged dynamic-partition
-          overwrite as the upsert path (atomic w.r.t. this plan's own
-          reads; crash-atomicity needs a real table format).
-        """
-        from pyspark.sql import functions as F
-
-        part_col = part_col or self.BUCKET_COL
-        counts = self.partition_file_counts(table, part_col)
-        todo = sorted(v for v, n in counts.items() if n > target_files)
-        if not todo:
-            return []
-        df = self.spark.read.parquet(self.path(table))
-        part_type = df.schema[part_col].dataType
-        touched = [F.lit(v).cast(part_type) for v in todo]
-        scoped = df.filter(F.col(part_col).isin(*touched))
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns if c != part_col]),
-            F.lit(target_files),
-        )
-        compacted = (
-            scoped.withColumn("_salt", salt)
-            .repartition(part_col, "_salt")
-            .drop("_salt")
-        )
-        self.overwrite_partitions(table, compacted, part_col)
-        return todo

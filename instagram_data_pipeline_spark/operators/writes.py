@@ -264,7 +264,7 @@ def scd2_apply(
     NULL). Unchanged rows and already-closed history pass through
     untouched, so the operation is append-plus-flag-flip on exactly the
     keys the diff touched — the plain-parquet analog of MERGE-based
-    SCD2, and partition-scoped when history is bucketed by key (see
+    SCD2, and bucket-scoped when history is bucketed by key (see
     ``Warehouse.upsert_partitioned``).
 
     ``batch_ts`` must be a deterministic literal (the batch's logical

@@ -50,9 +50,9 @@ def register(
 # one hard row per round; queries whose ORACLE or IMPLEMENTATION changed
 # this round re-verify in-window even if previously green; remaining
 # slots give once-green queries a second lifetime row and seat the
-# round's new queries.  Multi-round-green queries demote past the window
-# — all of them stay oracle-checked every CI run by
-# tests/test_queries_oracle.py regardless.
+# round's new queries.  Multi-round-green queries demote past the window;
+# tests/test_queries_oracle.py oracle-checks every registered query,
+# in or out of the window, on every run.
 REGISTRY_ORDER: tuple[str, ...] = (
     # ================= round-15 driver window (50 slots) =================
     # Standing policy unchanged (see above). Round 15 is optimization
@@ -131,8 +131,7 @@ REGISTRY_ORDER: tuple[str, ...] = (
     "mutual_edges_intersect",
     # ------------------- driver window ends at slot 50 --------------------
     # r16 queue: everything below stays DuckDB-oracle-checked by
-    # tests/test_queries_oracle.py (full sweep via
-    # SPARK_GRAFT_FULL_ORACLE=1 / scripts/verify_local.py); relative
+    # tests/test_queries_oracle.py and scripts/verify_local.py; relative
     # FIFO order preserved from the r14 seating.
     "txlog_notnull_sql",
     "anchor_text_index",

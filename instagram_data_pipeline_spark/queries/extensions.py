@@ -494,14 +494,15 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_testdata(spark, sf_dir, "embeddings")
     cents = S.kmeans_centroids_train(emb, k=8, iters=4)
     c = emb.select("vec_id", S.as_double_vec(F.col("embedding")).alias("_v"))
-    assign = S.ivf_assign(c, cents, "vec_id", n_probe=1)
+    assign = S.ivf_assign(c, cents, "vec_id", centroid_vec_col="centroid",
+                          n_probe=1)
     sizes = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
     return (
         cents.join(sizes, "cluster", "left")
         .select(
             "cluster",
             F.coalesce("n_members", F.lit(0)).alias("n_members"),
-            F.round(S.l2_norm(F.col("cv")), 6).alias("centroid_norm"),
+            F.round(S.l2_norm(F.col("centroid")), 6).alias("centroid_norm"),
         )
     )
 

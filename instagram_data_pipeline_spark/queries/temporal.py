@@ -203,10 +203,10 @@ FROM events GROUP BY 1, 2
 """,
     doc="continuously-maintained hourly rollup: events streamed one file "
         "per micro-batch through ContinuousRollupSink (foreachBatch, "
-        "date-partitioned additive merges touching only the batch's "
-        "dates, epoch-fenced), then the maintained TABLE is compared to "
-        "the one-shot batch aggregate — incremental == batch is the "
-        "continuous-aggregate contract.",
+        "additive merges committed on the transaction log, rewriting "
+        "only the batch's key buckets, epoch-fenced), then the "
+        "maintained TABLE is compared to the one-shot batch aggregate "
+        "— incremental == batch is the continuous-aggregate contract.",
     tags=("streaming", "rollup", "temporal"),
 )
 def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1503,7 +1503,7 @@ class TxlogSqlCatalog:
         error if any incoming/updated row violates a recorded CHECK
         constraint — one aggregate pass over the statement's rows only
         (never the table). The authoritative, race-proof enforcement
-        lives INSIDE the commit protocol (``formats._merge_with`` /
+        lives INSIDE the commit protocol (``formats.merge_with`` /
         ``replace_table`` re-validate against the snapshot actually
         published onto); this pre-check exists for error UX and costs
         one batch-sized job only when constraints are recorded."""

@@ -12,12 +12,11 @@ than re-added. Bucket arithmetic is pure column math (``date_trunc``),
 so the same ``rollup_increment`` powers batch backfills and the
 streaming path identically.
 
-Scale: the rollup tables are stored partitioned by bucket DATE, and the
-merge reads + rewrites only the dates present in the micro-batch
-(dynamic partition overwrite via ``Warehouse.overwrite_partitions``) —
-an anti-join-free upsert because counters ADD instead of replace. A
-steady stream touches 1-2 date partitions per batch regardless of how
-much history the rollup holds.
+Scale: each rollup table is a transaction-log table keyed on
+(bucket, event_type). A merge reads and rewrites only the key-hash
+buckets the micro-batch touches, with ``merge_rollup`` as the per-bucket
+rule — an anti-join-free upsert because counters ADD instead of
+replace — and publishes them in one crash-atomic commit.
 """
 
 from __future__ import annotations
@@ -68,17 +67,14 @@ class ContinuousRollupSink:
     Epoch replays are skipped, and the epoch is fenced only AFTER every
     grain's merge committed — with additive merges, fencing first would
     silently LOSE a batch whose write failed (the retry would be
-    skipped). The fence set is in-memory: the guarantee is
-    within-process, same-instance dedup only, and a replay after a
-    partial success (one grain committed, the next failed) double-counts
-    the committed grain — the transactional fix is a table format whose
-    MERGE carries the epoch id.
+    skipped). Each grain commits atomically on the transaction log, so
+    a failed merge leaves its table unchanged. The fence set is
+    in-memory: the guarantee is within-process, same-instance dedup
+    only, and a replay after a partial success (one grain committed,
+    the next failed) double-counts the committed grain."""
 
-    Storage: each rollup table is partitioned by bucket date
-    (``_pd=yyyy-MM-dd``); a merge reads only the touched dates and
-    rewrites only those partitions."""
-
-    PART_COL = "_pd"
+    KEYS = ["bucket", "event_type"]
+    NUM_BUCKETS = 8
 
     def __init__(self, warehouse: Warehouse, grains: tuple[str, ...] = ("hour", "day"),
                  prefix: str = "rollup"):
@@ -91,13 +87,8 @@ class ContinuousRollupSink:
         return f"{self.prefix}_{grain}"
 
     def read(self, grain: str) -> DataFrame:
-        """Rollup contents without the internal date-partition column."""
-        return self.wh.read(self.table(grain)).drop(self.PART_COL)
-
-    def _with_pd(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            self.PART_COL, F.date_format("bucket", "yyyy-MM-dd")
-        )
+        """Latest committed rollup contents."""
+        return self.wh.read_merged(self.table(grain))
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id in self.epochs:
@@ -109,25 +100,7 @@ class ContinuousRollupSink:
         self.epochs.add(epoch_id)
 
     def _merge_grain(self, batch_df: DataFrame, grain: str) -> None:
-        inc = rollup_increment(batch_df, grain)
-        name = self.table(grain)
-        if not self.wh.exists(name):
-            self._with_pd(inc).write.partitionBy(self.PART_COL).mode(
-                "overwrite"
-            ).parquet(self.wh.path(name))
-            return
-        # touched dates: tiny driver-side list (1-2 for a steady stream)
-        touched = [
-            r[0]
-            for r in self._with_pd(inc)
-            .select(self.PART_COL)
-            .dropDuplicates()
-            .collect()
-        ]
-        scoped = (
-            self.wh.read(name)
-            .filter(F.col(self.PART_COL).cast("string").isin(touched))
-            .drop(self.PART_COL)
+        self.wh.fmt.merge_with(
+            self.wh, self.table(grain), rollup_increment(batch_df, grain),
+            self.KEYS, self.NUM_BUCKETS, None, merge_rollup,
         )
-        merged = self._with_pd(merge_rollup(scoped, inc))
-        self.wh.overwrite_partitions(name, merged, self.PART_COL)

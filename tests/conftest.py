@@ -25,3 +25,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def dying_publish():
+    """A ``TransactionLogFormat`` whose next manifest publish, once
+    ``armed``, raises — a crash after the data files are written and
+    before the commit point."""
+    from instagram_data_pipeline_spark.formats import TransactionLogFormat
+
+    class DyingPublish(TransactionLogFormat):
+        def __init__(self):
+            self.armed = False
+
+        def _publish(
+            self, wh, table, version, files, schema_json=None, rows=None,
+            stats=None, **extra,
+        ):
+            if self.armed:
+                self.armed = False
+                raise OSError("simulated crash before manifest publish")
+            super()._publish(
+                wh, table, version, files, schema_json, rows=rows,
+                stats=stats, **extra,
+            )
+
+    return DyingPublish()

@@ -47,65 +47,6 @@ def test_format_roundtrip(spark, tmp_path, fmt):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, users.collect()))
 
 
-def _partition_files(root):
-    """{partition_dir: sorted data file names} under a parquet table."""
-    from pathlib import Path
-
-    out = {}
-    for d in Path(root).iterdir():
-        if d.is_dir() and d.name.startswith("_kb="):
-            out[d.name] = sorted(
-                f.name for f in d.iterdir() if f.name.endswith(".parquet")
-            )
-    return out
-
-
-def test_upsert_partitioned_merges_and_skips_untouched(spark, tmp_path):
-    """The plain-parquet MERGE: only partitions containing incoming keys
-    are rewritten; everything else keeps its exact data files."""
-    import datetime as dt
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
-    base = spark.createDataFrame(
-        [(i, "old", t0) for i in range(200)], "k long, v string, ts timestamp"
-    )
-    wh.upsert_partitioned("facts", base, keys=["k"], order_col="ts",
-                          num_buckets=8)
-    before = _partition_files(wh.path("facts"))
-    assert len(before) > 1  # keys spread over several buckets
-
-    incoming = spark.createDataFrame(
-        [(7, "new", t1), (9999, "fresh", t1)], "k long, v string, ts timestamp"
-    )
-    wh.upsert_partitioned("facts", incoming, keys=["k"], order_col="ts",
-                          num_buckets=8)
-    after = _partition_files(wh.path("facts"))
-
-    got = {r.k: r.v for r in wh.read_merged("facts").collect()}
-    assert len(got) == 201
-    assert got[7] == "new" and got[9999] == "fresh" and got[0] == "old"
-
-    # untouched partitions: identical file names (never rewritten)
-    from pyspark.sql import functions as F2
-
-    bucket = lambda k: spark.range(1).select(  # noqa: E731
-        F2.pmod(F2.xxhash64(F2.lit(k).cast("long")), F2.lit(8)).cast("int").alias("b")
-    ).collect()[0].b
-    touched = {f"_kb={bucket(7)}", f"_kb={bucket(9999)}"}
-    for part, files in before.items():
-        if part not in touched:
-            assert after[part] == files, f"{part} was rewritten"
-    for part in touched & set(before):
-        assert after[part] != before[part]  # touched ones DID change
-
-    # idempotent: replaying the same batch changes nothing
-    wh.upsert_partitioned("facts", incoming, keys=["k"], order_col="ts",
-                          num_buckets=8)
-    again = {r.k: r.v for r in wh.read_merged("facts").collect()}
-    assert again == got
-
-
 def test_jdbc_sink_requires_connection_options(spark):
     df = fixture_users(spark).select("user_id", "username")
     with pytest.raises(ValueError, match="jdbc sink requires"):
@@ -154,50 +95,10 @@ def test_register_views_sql_access(spark, sf_dir):
     }
 
 
-def test_compact_partitions(spark, tmp_path):
-    """Many small upserts -> many files per bucket; compaction rewrites
-    only oversized buckets down to target_files with data unchanged."""
-    import pyspark.sql.functions as F
-
-    from instagram_data_pipeline_spark.io import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    base = spark.range(0, 400).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
-        F.lit(0).alias("ver"),
-    )
-    wh.upsert_partitioned("t", base, ["k"], "ver", num_buckets=4)
-    # streaming-style APPEND micro-batches accrete one file per bucket
-    # per batch (the merge path rewrites partitions whole, so it never
-    # fragments — appends are where small files come from)
-    bcol = Warehouse.BUCKET_COL
-    for i in range(1, 6):
-        inc = spark.range(0, 80).select(
-            (F.col("id") * 5 + 1000 * i).alias("k"),
-            (F.col("id") + 1000 * i).alias("v"),
-            F.lit(i).alias("ver"),
-        ).withColumn(bcol, F.pmod(F.xxhash64(F.col("k")), F.lit(4)).cast("int"))
-        inc.coalesce(1).write.mode("append").partitionBy(bcol).parquet(
-            wh.path("t")
-        )
-    before = wh.partition_file_counts("t", Warehouse.BUCKET_COL)
-    assert max(before.values()) > 2, before
-    data_before = sorted(wh.read_merged("t").collect())
-
-    compacted = wh.compact_partitions("t", target_files=2)
-    assert compacted, "oversized buckets must be rewritten"
-    after = wh.partition_file_counts("t", Warehouse.BUCKET_COL)
-    assert all(n <= 2 for n in after.values()), after
-    assert sorted(wh.read_merged("t").collect()) == data_before
-
-    # idempotent: nothing left to compact
-    assert wh.compact_partitions("t", target_files=2) == []
-
-
 # ---------------------------------------------------------------------------
-# Table-format seam (VERDICT r3 #6): the same A1 MERGE semantics must
-# hold through both backends; the transaction-log backend additionally
-# guarantees crash-atomic commits and time travel.
+# A1 MERGE on the transaction log: keep-newest semantics,
+# crash-atomic commits and time travel. A Warehouse built without a
+# format merges through the same log.
 # ---------------------------------------------------------------------------
 
 
@@ -220,17 +121,15 @@ def _merge_scenario(spark, wh):
     return incoming
 
 
-@pytest.mark.parametrize("backend", ["parquet", "txlog"])
+@pytest.mark.parametrize("backend", ["txlog", "default"])
 def test_merge_semantics_identical_across_formats(spark, tmp_path, backend):
-    from instagram_data_pipeline_spark.formats import (
-        ParquetPartitionedFormat,
-        TransactionLogFormat,
-    )
+    from instagram_data_pipeline_spark.formats import TransactionLogFormat
 
-    fmt = (ParquetPartitionedFormat() if backend == "parquet"
-           else TransactionLogFormat())
+    fmt = TransactionLogFormat() if backend == "txlog" else None
     wh = Warehouse(spark, str(tmp_path / "wh"), fmt=fmt)
+    assert isinstance(wh.fmt, TransactionLogFormat)
     incoming = _merge_scenario(spark, wh)
+    assert wh.fmt.versions(wh, "facts") == [1, 2]
     got = {r.k: r.v for r in wh.read_merged("facts").collect()}
     assert len(got) == 201
     assert got[7] == "new"  # newest wins, in-batch dup loses
@@ -268,31 +167,13 @@ def test_txlog_untouched_files_carried_by_reference(spark, tmp_path):
     assert {r.k: r.v for r in v2.collect()}[7] == "new"
 
 
-def test_txlog_crash_before_commit_is_invisible(spark, tmp_path):
+def test_txlog_crash_before_commit_is_invisible(spark, tmp_path, dying_publish):
     """The manifest rename is the commit point: a crash after data files
     are written but before the publish leaves the previous version
     intact, readers see nothing, and the retry lands cleanly."""
     import datetime as dt
 
-    from instagram_data_pipeline_spark.formats import TransactionLogFormat
-
-    class DyingPublish(TransactionLogFormat):
-        def __init__(self):
-            self.armed = False
-
-        def _publish(
-            self, wh, table, version, files, schema_json=None, rows=None,
-            stats=None, **extra,
-        ):
-            if self.armed:
-                self.armed = False
-                raise OSError("simulated crash before manifest publish")
-            super()._publish(
-                wh, table, version, files, schema_json, rows=rows,
-                stats=stats, **extra,
-            )
-
-    fmt = DyingPublish()
+    fmt = dying_publish
     wh = Warehouse(spark, str(tmp_path / "wh"), fmt=fmt)
     t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
     base = spark.createDataFrame(
@@ -2094,10 +1975,8 @@ def test_txlog_idempotent_txn_merges(spark, tmp_path):
     txnAppId/txnVersion design): a replay at or below the recorded
     version publishes nothing and changes nothing; independent apps
     track independently; compaction and metadata commits carry the
-    bookkeeping; the plain-parquet backend refuses the option."""
-    from instagram_data_pipeline_spark.formats import (
-        ParquetPartitionedFormat, TransactionLogFormat,
-    )
+    bookkeeping."""
+    from instagram_data_pipeline_spark.formats import TransactionLogFormat
     from instagram_data_pipeline_spark.io import Warehouse
 
     fmt = TransactionLogFormat()
@@ -2150,15 +2029,6 @@ def test_txlog_idempotent_txn_merges(spark, tmp_path):
         ["k"], "ts", num_buckets=4, txn=("sink", 1),
     )
     assert fmt.read_merged(wh, "t").filter("val = 'GHOST'").count() == 0
-
-    pwh = Warehouse(
-        spark, str(tmp_path / "p"), fmt=ParquetPartitionedFormat()
-    )
-    with pytest.raises(ValueError, match="TransactionLogFormat"):
-        pwh.upsert_partitioned(
-            "t", batch(0, 5, "x", "2024-01-01"), ["k"], "ts",
-            num_buckets=4, txn=("sink", 0),
-        )
 
 
 def test_txlog_delete_keys_preserves_column_mapping(spark, tmp_path):
@@ -2705,6 +2575,15 @@ def test_txlog_vacuum_checkpoint_tmp_is_per_writer(spark, tmp_path):
     assert foreign.exists()  # in-flight writer's tmp untouched
     assert not crashed.exists()  # crashed vacuum's litter aged out
     assert not (root / f".liveset.tmp.{os.getpid()}").exists()
+
+    # grace_seconds=0 reclaims data files at once, but the tmp cutoff
+    # keeps its floor: a fresh foreign tmp survives, an aged one goes
+    assert fmt.vacuum(wh, "facts", grace_seconds=0.0) == []
+    assert foreign.exists()
+    aged = time.time() - 120
+    os.utime(foreign, (aged, aged))
+    assert fmt.vacuum(wh, "facts", grace_seconds=0.0) == []
+    assert not foreign.exists()
 
 
 # ---------------------------------------------------------------------------

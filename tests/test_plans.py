@@ -80,13 +80,11 @@ _COLLECT_ALLOWLIST: dict[str, tuple[int, str]] = {
     "operators/bloom.py": (1, "<= n_bits/64 bitmap words"),
     "operators/relational.py": (1, "G4 tiny-dim materialization: the "
                                    "27-row interest taxonomy"),
-    "streaming/rollup.py": (1, "touched partition dates per micro-batch "
-                               "(1-2 for a steady stream)"),
     "streaming/ledger.py": (1, "restart progress seed: ONE ledger row's "
                                "processed_items, read once per sink "
                                "instance (r9 resume-correct restart)"),
-    "formats.py": (9, "touched bucket ids of a merge batch (one site "
-                      "per TableFormat backend) + read_for_keys'/"
+    "formats.py": (8, "touched bucket ids of a merge batch (merge_with, "
+                      "the one merge loop) + read_for_keys'/"
                       "delete_keys'/delete_keys_dv's wanted-bucket "
                       "sets (each <= num_buckets ints) + "
                       "delete_keys_dv's victim positions — one (file, "

@@ -1,37 +1,20 @@
 """Registered queries hash-match their DuckDB oracle at sf0.001.
 
 This is the same gate the driver applies at sf0.01 (CORRECTNESS_r{N});
-running it in CI at the smallest SF keeps the loop fast.
-
-Default scope (VERDICT r14 "Next round" #2: the 240-query sweep outgrew
-the driver's pytest budget — the r14 driver run was cut off at ~69% with
-zero failures): the DRIVER WINDOW (first ``DRIVER_WINDOW`` entries of
-``REGISTRY_ORDER`` — exactly the slice the driver itself gates on, which
-by standing policy includes every query whose oracle or implementation
-changed this round). The FULL 240-query sweep still runs on demand:
-
-    SPARK_GRAFT_FULL_ORACLE=1 python -m pytest tests/test_queries_oracle.py
-
-and is what ``scripts/verify_local.py`` (the round-close gate) executes
-at sf0.01 regardless of this default. Plan invariants over all 240
-queries stay in the default run via tests/test_plans.py.
+running it in CI at the smallest SF keeps the loop fast. Every
+registered query runs, not just a leading subset: a change to global
+semantics (session configs, shared helpers) must not regress any
+registered query unnoticed.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from instagram_data_pipeline_spark.queries import DRIVER_WINDOW, load_all
+from instagram_data_pipeline_spark.queries import load_all
 from instagram_data_pipeline_spark.testing import compare_to_oracle, duck_connection
 
 REGISTRY = load_all()
-
-_FULL = os.environ.get("SPARK_GRAFT_FULL_ORACLE") == "1"
-# load_all() returns REGISTRY_ORDER order, so the first DRIVER_WINDOW
-# names ARE the driver's check window
-_NAMES = sorted(REGISTRY) if _FULL else list(REGISTRY)[:DRIVER_WINDOW]
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +22,7 @@ def duck(sf_dir):
     return duck_connection(sf_dir)
 
 
-@pytest.mark.parametrize("name", _NAMES)
+@pytest.mark.parametrize("name", list(REGISTRY))
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     spec = REGISTRY[name]
     sdf = spec.spark_fn(spark, sf_dir)

@@ -127,7 +127,12 @@ def test_kmeans_recovers_planted_clusters(spark):
     cents = kmeans_centroids_train(corpus, k=3, iters=4)
     assert cents.count() == 3
     c = corpus.select("vec_id", as_double_vec(F2.col("embedding")).alias("_v"))
-    assign = {r.vec_id: r.cluster for r in ivf_assign(c, cents, "vec_id").collect()}
+    assign = {
+        r.vec_id: r.cluster
+        for r in ivf_assign(
+            c, cents, "vec_id", centroid_vec_col="centroid"
+        ).collect()
+    }
     # members of the same planted cluster share an assigned cluster
     for i in range(30):
         assert assign[i] == assign[i % 3]
@@ -138,6 +143,40 @@ def test_kmeans_recovers_planted_clusters(spark):
     a = sorted(map(tuple, cents.collect()))
     b = sorted(map(tuple, again.collect()))
     assert a == b
+
+
+def test_kmeans_output_feeds_ivf_index_sink_unchanged(spark, tmp_path):
+    """The trainer's (cluster, centroid) frame is the shape the IVF
+    index sink reads: it goes in with no rename, every vector lands in
+    its planted cluster's list, and a probe finds the query's own
+    cluster-mates."""
+    from instagram_data_pipeline_spark.extensions.similarity import (
+        kmeans_centroids_train,
+    )
+    from instagram_data_pipeline_spark.streaming.annindex import IvfIndexSink
+
+    def vec(axis, jitter):
+        v = [0.0] * 12
+        v[axis] = 10.0
+        v[(axis + 1) % 12] = jitter
+        return v
+
+    rows = [(i, vec(i % 3, 0.1 * (i % 5))) for i in range(30)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = kmeans_centroids_train(corpus, k=3, iters=4)
+    assert cents.columns == ["cluster", "centroid"]
+    sink = IvfIndexSink(str(tmp_path / "ivf"), cents)
+    sink.process_batch(corpus, 0)
+    lists = {r.vec_id: r.cluster for r in sink.index(spark).collect()}
+    assert sorted(lists) == list(range(30))
+    assert all(lists[i] == lists[i % 3] for i in range(30))
+    assert len({lists[0], lists[1], lists[2]}) == 3
+    queries = corpus.filter("vec_id < 3").withColumnRenamed(
+        "vec_id", "query_id"
+    )
+    got = sink.topk(spark, queries, k=5, n_probe=1).collect()
+    assert len(got) == 15
+    assert all(r.vec_id % 3 == r.query_id for r in got)
 
 
 def test_near_dup_pairs_bucketed_subset_and_recall(emb):

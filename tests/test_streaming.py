@@ -212,15 +212,21 @@ def test_continuous_rollup_matches_batch_and_fences_replay(
         got = sorted(map(tuple, sink.read(grain).collect()))
         assert got == want, f"{grain} rollup != batch aggregate"
 
-    # storage is partitioned by bucket date (partition-scoped merges)
-    from pathlib import Path
-
-    day_dirs = [
-        p.name
-        for p in Path(wh.path(sink.table("day"))).iterdir()
-        if p.name.startswith(f"{sink.PART_COL}=")
-    ]
-    assert len(day_dirs) > 1, "rollup table must be date-partitioned"
+    # merges are bucket-scoped: a one-event batch rewrites one key
+    # bucket, and every file of the other buckets is carried into the
+    # new version by reference
+    day = sink.table("day")
+    files_before = wh.fmt._latest(wh, day)["files"]
+    sink(events.orderBy("event_id").limit(1), max(sink.epochs) + 1)
+    files_after = wh.fmt._latest(wh, day)["files"]
+    touched = {b for f, b in files_after.items() if f not in files_before}
+    assert len(touched) == 1
+    untouched = {f: b for f, b in files_before.items() if b not in touched}
+    assert untouched, "rollup rows must spread over several buckets"
+    assert all(files_after.get(f) == b for f, b in untouched.items())
+    assert not any(
+        f in files_after for f, b in files_before.items() if b in touched
+    )
 
     # replay the last epoch: additive merge MUST be fenced
     last = max(sink.epochs)
@@ -251,6 +257,42 @@ def test_continuous_rollup_matches_batch_and_fences_replay(
     sink._merge_grain = orig
     sink(events.limit(10), failing)  # retry succeeds and fences
     assert failing in sink.epochs
+
+
+def test_continuous_rollup_publish_crash_is_atomic(
+    spark, sf_dir, tmp_path, dying_publish
+):
+    """A crash between a grain's data-file write and its manifest
+    publish raises out of the sink, leaves every rollup table as it
+    was and the epoch unfenced; the retried epoch lands exactly once."""
+    from instagram_data_pipeline_spark.io import load_testdata
+    from instagram_data_pipeline_spark.streaming.rollup import (
+        ContinuousRollupSink,
+        rollup_increment,
+    )
+
+    events = load_testdata(spark, sf_dir, "events")
+    first = events.filter(F.col("event_id") % 2 == 0)
+    second = events.filter(F.col("event_id") % 2 == 1)
+    wh = Warehouse(spark, str(tmp_path / "wh"), fmt=dying_publish)
+    sink = ContinuousRollupSink(wh)
+    sink(first, 0)
+
+    def state():
+        return {g: sorted(map(tuple, sink.read(g).collect()))
+                for g in sink.grains}
+
+    before = state()
+    dying_publish.armed = True
+    with pytest.raises(OSError, match="simulated crash"):
+        sink(second, 1)
+    assert state() == before
+    assert 1 not in sink.epochs
+    sink(second, 1)  # the retry commits and fences
+    assert 1 in sink.epochs
+    for grain in sink.grains:
+        want = sorted(map(tuple, rollup_increment(events, grain).collect()))
+        assert sorted(map(tuple, sink.read(grain).collect())) == want
 
 
 def test_stream_stream_interval_join_matches_batch(
