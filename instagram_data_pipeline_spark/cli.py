@@ -21,7 +21,6 @@ import datetime as dt
 import json
 import sys
 
-from .analysis.interests import analyze_pending_users
 from .plans.manual import Pipeline
 from .plans.scheduler import JobScheduler
 from .session import build_session
@@ -71,23 +70,16 @@ def main(argv: list[str] | None = None) -> int:
         }
         totals = {"enqueued": enq, "dispatched": 0, "completed": 0, "failed": 0}
         for _ in range(args.ticks):
-            t = sched.process_pending_jobs(
-                handlers, on_both_complete=lambda u: pipe.derive_mutuals()
-            )
+            fired: list[str] = []
+            t = sched.process_pending_jobs(handlers, on_both_complete=fired.append)
+            # one whole-graph derivation covers every user that fired
+            if fired:
+                pipe.derive_mutuals()
             for k in ("dispatched", "completed", "failed"):
                 totals[k] += t[k]
         print(json.dumps({"mode": "scheduled", **totals}))
     else:  # analysis
-        merged = analyze_pending_users(
-            pipe.wh.read("users"),
-            pipe.wh.read("following"),
-            pipe.wh.read("scrape_jobs"),
-            pipe.wh.read("interests"),
-            pipe.wh.read("interest_categories"),
-            limit=args.limit,
-            now=now,
-        )
-        pipe.wh.overwrite_atomic("interests", merged)
+        pipe.analyze_interests(limit=args.limit)
         print(json.dumps({
             "mode": "analysis",
             "interests_total": pipe.wh.read("interests").count(),

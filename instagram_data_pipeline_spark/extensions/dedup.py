@@ -160,9 +160,8 @@ def ngram_jaccard_pairs(
     jac = F.col("shared") * F.lit(1.0) / (F.col("na") + F.col("nb") - F.col("shared"))
     # SHUFFLE_HASH on the per-doc size side: without a hint the static
     # planner may estimate the PAIR table as small and broadcast it —
-    # at an 8x corpus that broadcast OOMs the driver (found by
-    # scripts/scale_probe.py), and at 100 TB the pair side is never
-    # broadcastable. Shuffled-hash builds from the bounded size-table
+    # at an 8x synthetic corpus that broadcast OOMs the driver, and at
+    # 100 TB the pair side is never broadcastable. Shuffled-hash builds from the bounded size-table
     # partition instead: scale-safe at every size, no sort.
     return (
         pairs.join(sa.hint("shuffle_hash"), "doc_a")

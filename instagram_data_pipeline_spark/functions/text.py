@@ -38,9 +38,9 @@ def words(col: Column) -> Column:
     [''] — consumers that depend on the ['']-artifact go through
     :func:`tokens`, everything word-shaped uses this.
 
-    r14 measurement (scripts/microbench_text.py, sf0.1 documents):
-    tokenization 0.398s -> 0.215s; the downstream composites
-    (fingerprint, lang_id, shingles) gain 2-30x because every extra
+    Measured on the sf0.1 documents corpus: tokenization 0.398s ->
+    0.215s; the downstream composites (fingerprint, lang_id, shingles)
+    gain 2-30x because every extra
     regex pass was re-evaluated per expression reference in the
     interpreted (higher-order-function) projections."""
     return F.filter(
@@ -55,9 +55,8 @@ def normalized(col: Column) -> Column:
     '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) — computed as the
     space-join of :func:`words`, which is the same value (words joined
     by single spaces; '' when no words survive; NULL for NULL) in one
-    regex pass instead of three (equality asserted over the testdata
-    corpus in scripts/microbench_text.py and by every oracle twin that
-    embeds the SQL mirror).
+    regex pass instead of three (equality asserted by every oracle twin
+    that embeds the SQL mirror).
     """
     return F.array_join(words(col), " ")
 
@@ -182,8 +181,8 @@ def lang_id(col: Column) -> Column:
     over four ``size(filter(tokens, ...))`` scores re-evaluated the
     full three-regex tokenization per expression reference — 11x per
     row in the interpreted projection (higher-order functions don't
-    codegen); r14 measured 2.196s -> 0.606s over the sf0.1 corpus
-    (scripts/microbench_text.py). '' split artifacts match no marker,
+    codegen); measured 2.196s -> 0.606s over the sf0.1 corpus.
+    '' split artifacts match no marker,
     so raw-split counts equal the normalized-token counts. The
     COALESCE pins the CASE chain's NULL-text result ('fr': every
     condition is unknown, so the ELSE fires) — same as the SQL mirror.

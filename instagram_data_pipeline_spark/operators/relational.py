@@ -111,22 +111,13 @@ def user_interest_detail(
     )
 
 
-# -- J6 / G1 (job_scheduler.py:126-133, tests): count-via-join gates -------
+# -- J6 (job_scheduler.py:126-133, tests): count-via-join gate ------------
 def edge_count_for_user(edges: DataFrame, users: DataFrame, username: str,
                         edge_user_col: str = "user_id") -> int:
     """COUNT(*) of edges for a username, via join to users."""
     uid = users.filter(F.col("username") == username).select("user_id")
     return edges.join(
         F.broadcast(uid), edges[edge_user_col] == uid.user_id, "inner"
-    ).count()
-
-
-def completed_scrape_count(scrape_jobs: DataFrame, username: str) -> int:
-    """G1: completeness gate for the mutuals trigger (T7)."""
-    return scrape_jobs.filter(
-        (F.col("target_username") == username)
-        & F.col("job_type").isin("followers", "following")
-        & (F.col("status") == "completed")
     ).count()
 
 
@@ -157,9 +148,9 @@ def dequeue_pending(scrape_jobs: DataFrame, batch_size: int) -> DataFrame:
 
 # -- T7 (job_scheduler.py:124-148): completeness trigger, set-based --------
 def both_complete_users(scrape_jobs: DataFrame) -> DataFrame:
-    """Usernames whose 'followers' AND 'following' scrapes both completed
-    — the set-based form of the per-user ``completed_scrape_count >= 2``
-    gate (one aggregation instead of a driver loop per dequeued row)."""
+    """G1: usernames whose 'followers' AND 'following' scrapes both
+    completed — the mutuals trigger's completeness gate, one aggregation
+    over the ledger instead of a count per dequeued row."""
     return (
         scrape_jobs.filter(
             (F.col("status") == "completed")

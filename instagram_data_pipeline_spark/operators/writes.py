@@ -8,6 +8,7 @@ the same *semantics* from set operations:
 * A2 insert-if-absent    -> dedup + left-anti + append
 * A3 SERIAL/RETURNING    -> caller-assigned surrogate ids (unique, NOT
   dense — oracle queries must never compare generated ids, SURVEY §7.2)
+* A4-A6 ledger update    -> broadcast left join against an update frame
 * A8 targeted delete     -> left-anti overwrite
 
 All are idempotent (run twice == run once) — that is the guarantee
@@ -116,93 +117,30 @@ def delete_matching(
     return existing.join(targets.select(*keys), keys, "left_anti")
 
 
-def mark_status(
-    jobs: DataFrame,
-    picked: DataFrame,
-    status: str,
-    key: str = "job_id",
-    started_at=None,
-    completed_at=None,
-    error_message: str | None = None,
-) -> DataFrame:
-    """A4/A5/A6 set-based form: transition every job whose ``key`` appears
-    in ``picked`` in ONE pass (UPDATE ... WHERE job_id IN (...)).
+def update_jobs(jobs: DataFrame, updates: DataFrame,
+                key: str = "job_id") -> DataFrame:
+    """A4/A5/A6: UPDATE scrape_jobs SET ... FROM updates WHERE the key
+    matches (instagram_scraper.py:284-314, 388-407) — the one
+    ledger-update operator.
 
-    The per-id ``update_job_status`` is the point-update twin; this is the
-    shape that scales — one broadcast hash join against the (small, by
-    construction: a dequeued batch) pick set instead of a driver loop.
+    ``updates`` holds ``key`` plus any ledger columns; on a matching row
+    each non-null update value replaces the stored one (NULL means
+    "leave as is"), cast to the ledger's type. One broadcast left join
+    against the (small: a dequeued batch, one sink's row) update set;
+    duplicate keys collapse first so the ledger keeps its row count.
     """
-    picks = F.broadcast(
-        picked.select(key).dropDuplicates().withColumn("_hit", F.lit(True))
+    cols = [c for c in updates.columns if c != key]
+    upd = F.broadcast(
+        updates.dropDuplicates([key]).select(
+            key, *[F.col(c).alias(f"_u_{c}") for c in cols]
+        )
     )
-    hit = F.col("_hit") == F.lit(True)
-    out = jobs.join(picks, key, "left").withColumn(
-        "status", F.when(hit, F.lit(status)).otherwise(F.col("status"))
-    )
-    if started_at is not None:
-        out = out.withColumn(
-            "started_at",
-            F.when(hit, F.lit(started_at).cast("timestamp")).otherwise(
-                F.col("started_at")
-            ),
-        )
-    if completed_at is not None:
-        out = out.withColumn(
-            "completed_at",
-            F.when(hit, F.lit(completed_at).cast("timestamp")).otherwise(
-                F.col("completed_at")
-            ),
-        )
-    if error_message is not None:
-        out = out.withColumn(
-            "error_message",
-            F.when(hit, F.lit(error_message)).otherwise(F.col("error_message")),
-        )
-    return out.drop("_hit")
-
-
-def update_job_status(
-    jobs: DataFrame,
-    job_id: int,
-    status: str | None = None,
-    error_message: str | None = None,
-    total_items: int | None = None,
-    processed_items: int | None = None,
-    completed_at=None,
-) -> DataFrame:
-    """A4/A5/A6: point-update of one ledger row (UPDATE scrape_jobs ...
-    WHERE job_id = %s, instagram_scraper.py:284-314, 388-407).
-
-    The ledger is a tiny control table; read-modify-overwrite of the whole
-    table is the Parquet analog of a point UPDATE.
-    """
-    hit = F.col("job_id") == F.lit(job_id)
-    out = jobs
-    if status is not None:
-        out = out.withColumn("status", F.when(hit, F.lit(status)).otherwise(F.col("status")))
-    if error_message is not None:
-        out = out.withColumn(
-            "error_message",
-            F.when(hit, F.lit(error_message)).otherwise(F.col("error_message")),
-        )
-    if total_items is not None:
-        out = out.withColumn(
-            "total_items",
-            F.when(hit, F.lit(total_items)).otherwise(F.col("total_items")),
-        )
-    if processed_items is not None:
-        out = out.withColumn(
-            "processed_items",
-            F.when(hit, F.lit(processed_items)).otherwise(F.col("processed_items")),
-        )
-    if completed_at is not None:
-        out = out.withColumn(
-            "completed_at",
-            F.when(hit, F.lit(completed_at).cast("timestamp")).otherwise(
-                F.col("completed_at")
-            ),
-        )
-    return out
+    types = {f.name: f.dataType for f in jobs.schema.fields}
+    return jobs.join(upd, key, "left").select(*[
+        F.coalesce(F.col(f"_u_{c}").cast(types[c]), F.col(c)).alias(c)
+        if c in cols else F.col(c)
+        for c in jobs.columns
+    ])
 
 
 def snapshot_diff(

@@ -7,10 +7,13 @@ marked in_progress/completed/failed on the SAME ledger row —
 exactly-once dequeue semantics instead of the reference's orphaned
 pending rows.
 
-The ledger is a tiny control table; every update is a
-read-modify-overwrite (the Parquet analog of point UPDATEs). State that
-must be transactional at scale moves to a table format or the streaming
-checkpoint (SURVEY §2.9 T6) without changing this interface.
+The ledger is a tiny control table. A tick collects its <= batch_size
+dequeued rows once, runs the handlers, and applies every status change
+with ONE ``update_jobs`` call (a keyed join against a literal frame of
+the results) and one overwrite; a tick that dequeues nothing writes
+nothing. State that must be transactional at scale moves to a table
+format or the streaming checkpoint (SURVEY §2.9 T6) without changing
+this interface.
 """
 
 from __future__ import annotations
@@ -22,10 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import Warehouse
-from ..operators.relational import completed_scrape_count, dequeue_pending
-from ..operators.writes import assign_dense_ids, update_job_status
+from ..operators.relational import both_complete_users, dequeue_pending
+from ..operators.writes import update_jobs
 
 JOB_TYPES = ("profile", "followers", "following")
+EDGE_TYPES = ("followers", "following")
 
 
 def enqueue_due(
@@ -90,21 +94,31 @@ class JobScheduler:
     # -- A7: conditional enqueue (job_scheduler.py:49-77) -----------------
     def enqueue_users(self, usernames: list[str]) -> int:
         """Enqueue the 3 scrape job types per user unless a job of any
-        scrape type started within the last 7 days (P5 guard)."""
+        scrape type started within the last 7 days (P5 guard). Returns
+        the number of jobs enqueued."""
         jobs = self._jobs()
         candidates = self.spark.createDataFrame(
             [(u,) for u in usernames], "target_username string"
         )
-        new_jobs = enqueue_due(jobs, candidates, self.now - dt.timedelta(days=7))
-        max_id = jobs.agg(F.coalesce(F.max("job_id"), F.lit(0))).collect()[0][0]
-        new_jobs = assign_dense_ids(
-            new_jobs, "job_id", order_by=["target_username", "job_type"],
-            start=int(max_id) + 1,
-        ).select(*jobs.columns)
-        n = new_jobs.count()
-        if n:
-            self.wh.overwrite_atomic("scrape_jobs", jobs.unionByName(new_jobs))
-        return n
+        max_id = jobs.agg(F.coalesce(F.max("job_id"), F.lit(0)).alias("_max_id"))
+        # <= 3 rows per username, evaluated once; the ledger max rides along
+        rows = (
+            enqueue_due(jobs, candidates, self.now - dt.timedelta(days=7))
+            .crossJoin(F.broadcast(max_id))
+            .collect()
+        )
+        if not rows:
+            return 0
+        # dense ids above the ledger max, in (target_username, job_type)
+        # order (Python's str order is Spark's binary UTF-8 order)
+        rows.sort(key=lambda r: (r.target_username, r.job_type))
+        start = rows[0]._max_id + 1
+        new_jobs = self.spark.createDataFrame(
+            [{**r.asDict(), "job_id": start + i} for i, r in enumerate(rows)],
+            jobs.schema,
+        )
+        self.wh.overwrite_atomic("scrape_jobs", jobs.unionByName(new_jobs))
+        return len(rows)
 
     # -- T3: daily quota (job_scheduler.py:29-47, 84-86) ------------------
     def quota_used_today(self) -> int:
@@ -125,42 +139,46 @@ class JobScheduler:
         on_both_complete: Callable[[str], None] | None = None,
     ) -> dict[str, int]:
         """One scheduler tick: quota gate -> O1 FIFO dequeue -> dispatch
-        -> ledger update -> T7 completeness trigger."""
+        -> one ledger update -> T7 completeness trigger."""
+        stats = {"dispatched": 0, "completed": 0, "failed": 0}
         remaining = self.daily_quota - self.quota_used_today()
         if remaining <= 0:
-            return {"dispatched": 0, "completed": 0, "failed": 0}
-        batch = dequeue_pending(self._jobs(), min(remaining, self.batch_size))
-        stats = {"dispatched": 0, "completed": 0, "failed": 0}
-        rows = batch.collect()  # <=10 control rows — driver-side by design
-        jobs = self._jobs()
+            return stats
+        # <= batch_size control rows — driver-side by design
+        rows = dequeue_pending(self._jobs(), min(remaining, self.batch_size)).collect()
+        if not rows:
+            return stats
+        updates = []
         for row in rows:
-            stats["dispatched"] += 1
-            jobs = update_job_status(
-                jobs, row.job_id, status="in_progress", completed_at=None
-            ).withColumn(
-                "started_at",
-                F.when(
-                    F.col("job_id") == row.job_id, F.lit(self.now).cast("timestamp")
-                ).otherwise(F.col("started_at")),
-            )
             try:
-                handler = handlers[row.job_type]
-                handler(row.target_username)
+                handlers[row.job_type](row.target_username)
             except Exception as exc:  # noqa: BLE001 — A6 failure path
-                jobs = update_job_status(
-                    jobs, row.job_id, status="failed", error_message=str(exc)
-                )
+                updates.append((row.job_id, "failed", self.now, None, str(exc)))
                 stats["failed"] += 1
-                continue
-            jobs = update_job_status(
-                jobs, row.job_id, status="completed", completed_at=self.now
-            )
-            stats["completed"] += 1
-        self.wh.overwrite_atomic("scrape_jobs", jobs)
-        # T7: after edge scrapes, fire mutuals when both types completed
-        if on_both_complete:
+            else:
+                updates.append((row.job_id, "completed", self.now, self.now, None))
+                stats["completed"] += 1
+        stats["dispatched"] = len(rows)
+        self.wh.overwrite_atomic("scrape_jobs", update_jobs(
+            self._jobs(),
+            self.spark.createDataFrame(
+                updates,
+                "job_id long, status string, started_at timestamp, "
+                "completed_at timestamp, error_message string",
+            ),
+        ))
+        # T7: after edge scrapes, fire mutuals when both types completed —
+        # once per dispatched edge row, like the reference's per-job check
+        edge_users = {r.target_username for r in rows if r.job_type in EDGE_TYPES}
+        if on_both_complete and edge_users:
+            # <= batch_size usernames
+            done = {
+                r.target_username
+                for r in both_complete_users(
+                    self._jobs().filter(F.col("target_username").isin(*edge_users))
+                ).collect()
+            }
             for row in rows:
-                if row.job_type in ("followers", "following"):
-                    if completed_scrape_count(self._jobs(), row.target_username) >= 2:
-                        on_both_complete(row.target_username)
+                if row.job_type in EDGE_TYPES and row.target_username in done:
+                    on_both_complete(row.target_username)
         return stats

@@ -5,8 +5,8 @@ The reference's signature surface is its PostgreSQL write patterns
 testdata has no jobs table, so each query derives a scrape_jobs-shaped
 ledger from ``orders`` with deterministic column mappings — identically
 in Spark and in the DuckDB oracle — then applies the REAL operator
-functions (``enqueue_due``, ``dequeue_pending``, ``mark_status``,
-``update_job_status``, ``delete_matching``, ``assign_dense_ids``,
+functions (``enqueue_due``, ``dequeue_pending``, ``update_jobs`` — the
+one ledger-update operator, ``delete_matching``, ``assign_dense_ids``,
 ``both_complete_users``, ``daily_quota_admission``) and returns the
 state-out table. This closes the VERDICT r1 gap: the write family was
 pytest-only; now every A/T operator has a green CORRECTNESS entry.
@@ -36,8 +36,7 @@ from ..operators.relational import (
 from ..operators.writes import (
     assign_dense_ids,
     delete_matching,
-    mark_status,
-    update_job_status,
+    update_jobs,
 )
 from ..plans.scheduler import enqueue_due
 from . import register
@@ -210,8 +209,12 @@ FROM jobs
 )
 def q_ledger_dequeue_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
     jobs = _ledger_shaped(_jobs_fixture(spark, sf_dir))
-    batch = dequeue_pending(jobs, 100)
-    out = mark_status(jobs, batch, "in_progress", started_at=_NOW)
+    batch = dequeue_pending(jobs, 100).select(
+        "job_id",
+        F.lit("in_progress").alias("status"),
+        F.lit(_NOW).alias("started_at"),
+    )
+    out = update_jobs(jobs, batch)
     return out.select(
         "job_id",
         "target_username",
@@ -242,11 +245,14 @@ FROM jobs
 )
 def q_ledger_complete_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     jobs = _ledger_shaped(_jobs_fixture(spark, sf_dir))
-    inflight = jobs.filter(F.col("status") == "in_progress")
-    done = inflight.filter(F.col("job_id") % 2 == 0)
-    failed = inflight.filter(F.col("job_id") % 2 != 0)
-    out = mark_status(jobs, done, "completed", completed_at=_NOW)
-    out = mark_status(out, failed, "failed", error_message="handler error")
+    even = F.col("job_id") % 2 == 0
+    outcomes = jobs.filter(F.col("status") == "in_progress").select(
+        "job_id",
+        F.when(even, "completed").otherwise("failed").alias("status"),
+        F.when(even, F.lit(_NOW)).alias("completed_at"),
+        F.when(~even, "handler error").alias("error_message"),
+    )
+    out = update_jobs(jobs, outcomes)
     return out.select(
         "job_id",
         "status",
@@ -256,7 +262,7 @@ def q_ledger_complete_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A4 point update: update_job_status on one ledger row
+# A4 point update: update_jobs with a one-row update frame
 # ---------------------------------------------------------------------------
 @register(
     "ledger_point_update",
@@ -276,10 +282,11 @@ FROM (
 )
 def q_ledger_point_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     jobs = _ledger_shaped(_jobs_fixture(spark, sf_dir))
-    out = update_job_status(
-        jobs, 42, status="failed", error_message="rate limited",
-        processed_items=7,
+    updates = spark.createDataFrame(
+        [(42, "failed", "rate limited", 7)],
+        "job_id long, status string, error_message string, processed_items int",
     )
+    out = update_jobs(jobs, updates)
     return out.select("job_id", "status", "error_message", "processed_items")
 
 

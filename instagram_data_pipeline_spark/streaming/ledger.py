@@ -5,6 +5,8 @@ The reference committed every 10 ingested rows and point-updated
 ``processed_items`` (instagram_scraper.py:282-302); in Structured
 Streaming the micro-batch IS the commit unit — ``foreachBatch`` gets
 (batch_df, epoch_id) and the checkpoint replays exactly-once on failure.
+Every ledger change goes through ``operators.writes.update_jobs`` with a
+one-row update frame, the same operator the scheduler tick uses.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import Warehouse
-from ..operators.writes import update_job_status
+from ..operators.writes import update_jobs
 
 
 class LedgerProgressSink:
@@ -69,24 +71,26 @@ class LedgerProgressSink:
         self.wh.overwrite_atomic(
             self.table, existing.unionByName(batch_df.select(*existing.columns))
         )
-        jobs = update_job_status(
-            self.wh.read("scrape_jobs"),
-            self.job_id,
-            status="in_progress",
-            processed_items=self.rows_seen + n,
+        self._update_ledger(
+            "status string, processed_items int",
+            ("in_progress", self.rows_seen + n),
         )
-        self.wh.overwrite_atomic("scrape_jobs", jobs)
         self.rows_seen += n
         self.epochs.append(epoch_id)
 
     def complete(self) -> None:
         self._seed_progress()
-        jobs = update_job_status(
-            self.wh.read("scrape_jobs"),
-            self.job_id,
-            status="completed",
-            total_items=self.rows_seen,
-            processed_items=self.rows_seen,
-            completed_at=self.now,
+        self._update_ledger(
+            "status string, total_items int, processed_items int, "
+            "completed_at timestamp",
+            ("completed", self.rows_seen, self.rows_seen, self.now),
         )
-        self.wh.overwrite_atomic("scrape_jobs", jobs)
+
+    def _update_ledger(self, schema: str, values: tuple) -> None:
+        """A4/A5 on this sink's ledger row: one-row ``update_jobs``."""
+        updates = self.wh.spark.createDataFrame(
+            [(self.job_id, *values)], "job_id long, " + schema
+        )
+        self.wh.overwrite_atomic(
+            "scrape_jobs", update_jobs(self.wh.read("scrape_jobs"), updates)
+        )

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries into plans/<dir>/.
+"""Capture .explain("formatted") for named queries into an output dir.
 
-    python scripts/capture_plans.py --out plans/r14 --suffix _before q1 q2 ...
+    python scripts/capture_plans.py --out /tmp/plans --suffix _before q1 q2 ...
 
 With no query names: the full bench set (headline + extras).
 """
@@ -20,7 +20,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="plans/r14")
+    ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="_before")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()

@@ -5,6 +5,7 @@ reference's tests/test_pipeline.py integration suite, hermetic."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -145,3 +146,34 @@ def test_completeness_trigger_fires_mutuals(spark, pipeline, sched):
     # (once per completed edge-job row, T7)
     assert fired == ["instagram", "instagram"]
     assert pipeline.derive_mutuals("12345") == 2
+
+
+def test_empty_tick_writes_nothing(spark, pipeline, sched):
+    sched.enqueue_users(["alice"])
+    handlers = {t: (lambda u: None) for t in ("profile", "followers", "following")}
+    assert sched.process_pending_jobs(handlers)["dispatched"] == 3
+    path = pipeline.wh.path("scrape_jobs")
+    before = sorted(os.listdir(path))
+    assert sched.process_pending_jobs(handlers) == {
+        "dispatched": 0, "completed": 0, "failed": 0
+    }
+    assert sorted(os.listdir(path)) == before
+
+
+def test_completeness_trigger_needs_both_edge_types(spark, pipeline, sched):
+    from instagram_data_pipeline_spark.schemas import SCRAPE_JOBS
+
+    earlier = NOW - dt.timedelta(days=1)
+    pipeline.wh.overwrite_atomic("scrape_jobs", spark.createDataFrame(
+        [
+            (1, "alice", "followers", "completed", earlier, earlier, None, 1, 1, None),
+            (2, "alice", "followers", "pending", None, None, None, None, 0, None),
+        ],
+        SCRAPE_JOBS,
+    ))
+    fired = []
+    handlers = {t: (lambda u: None) for t in ("profile", "followers", "following")}
+    stats = sched.process_pending_jobs(handlers, on_both_complete=fired.append)
+    assert stats["completed"] == 1
+    # two completed 'followers' jobs, no completed 'following': T7 waits
+    assert fired == []

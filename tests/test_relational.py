@@ -3,10 +3,10 @@
 from __future__ import annotations
 
 from instagram_data_pipeline_spark.operators.relational import (
+    both_complete_users,
     category_counts,
     category_hierarchy,
     category_map,
-    completed_scrape_count,
     dequeue_pending,
     edge_count_for_user,
     following_profiles,
@@ -76,8 +76,9 @@ def test_edge_and_job_counts(spark):
     followers, _ = fixture_edges(spark)
     assert edge_count_for_user(followers, users, "instagram") == 3
     jobs = fixture_jobs(spark)
-    assert completed_scrape_count(jobs, "instagram") == 2  # both types done
-    assert completed_scrape_count(jobs, "lurker") == 1  # only followers
+    done = {r.target_username for r in both_complete_users(jobs).collect()}
+    assert "instagram" in done  # both types done
+    assert "lurker" not in done  # only followers
 
 
 def test_dequeue_fifo(spark):

@@ -11,7 +11,7 @@ from instagram_data_pipeline_spark.operators.writes import (
     assign_dense_ids,
     delete_matching,
     insert_if_absent,
-    update_job_status,
+    update_jobs,
     upsert_keep_newest,
 )
 from instagram_data_pipeline_spark.schemas import USERS
@@ -86,12 +86,14 @@ def test_delete_matching(spark):
     assert out.filter(F.col("username") == "instagram").count() == 0
 
 
-def test_update_job_status_point_update(spark):
+def test_update_jobs_point_update(spark):
     jobs = fixture_jobs(spark)
-    out = update_job_status(
-        jobs, job_id=5, status="completed", total_items=7, processed_items=7,
-        completed_at=NEW_TS,
+    updates = spark.createDataFrame(
+        [(5, "completed", 7, 7, NEW_TS)],
+        "job_id long, status string, total_items int, processed_items int, "
+        "completed_at timestamp",
     )
+    out = update_jobs(jobs, updates)
     row = out.filter(F.col("job_id") == 5).collect()[0]
     assert row.status == "completed" and row.total_items == 7
     # all other rows untouched
