@@ -58,16 +58,20 @@ def _summarize_partition(
 ) -> Iterator[pd.DataFrame]:
     """One vectorized aggregation per Arrow batch + a final combine —
     every row of a customer is in this partition (key repartition), but
-    may span several batches."""
+    may span several batches. NULL keys are groups, as in Spark's
+    ``groupBy``; a NULL priority sorts first among equal counts."""
     pc_parts: list[pd.DataFrame] = []   # (cust, priority) partial counts
     st_parts: list[pd.DataFrame] = []   # per-cust partial max/min
     for pdf in batches:
+        # Arrow hands a nullable long over as float64; keep it integral
+        pdf = pdf.astype({"o_custkey": "Int64"})
         pc_parts.append(
-            pdf.groupby(["o_custkey", "o_orderpriority"], sort=False)
+            pdf.groupby(["o_custkey", "o_orderpriority"], sort=False,
+                        dropna=False)
             .size().reset_index(name="c")
         )
         st_parts.append(
-            pdf.groupby("o_custkey", sort=False).agg(
+            pdf.groupby("o_custkey", sort=False, dropna=False).agg(
                 n_orders=("o_orderpriority", "size"),
                 max_price=("o_totalprice", "max"),
                 first_ts=("o_orderdate", "min"),
@@ -77,29 +81,30 @@ def _summarize_partition(
         return
     pc = (
         pd.concat(pc_parts)
-        .groupby(["o_custkey", "o_orderpriority"], sort=False)["c"]
-        .sum().reset_index()
+        .groupby(["o_custkey", "o_orderpriority"], sort=False, dropna=False)
+        ["c"].sum().reset_index()
     )
     # argmax with the reference tie-break: count desc, priority asc
     top = (
-        pc.sort_values(["c", "o_orderpriority"], ascending=[False, True])
+        pc.sort_values(["c", "o_orderpriority"], ascending=[False, True],
+                       na_position="first")
         .drop_duplicates("o_custkey")
         [["o_custkey", "o_orderpriority"]]
         .rename(columns={"o_orderpriority": "top_priority"})
     )
     st = (
         pd.concat(st_parts)
-        .groupby("o_custkey", sort=False)
+        .groupby("o_custkey", sort=False, dropna=False)
         .agg(
             n_orders=("n_orders", "sum"),
             max_price=("max_price", "max"),
             first_ts=("first_ts", "min"),
         ).reset_index()
     )
-    out = st.merge(top, on="o_custkey")
+    out = st.merge(top, on="o_custkey", how="left")
     yield pd.DataFrame(
         {
-            "o_custkey": out["o_custkey"].astype("int64"),
+            "o_custkey": out["o_custkey"],
             "n_orders": out["n_orders"].astype("int64"),
             "top_priority": out["top_priority"],
             "max_price": out["max_price"].astype("float64"),

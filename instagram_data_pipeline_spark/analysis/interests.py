@@ -9,12 +9,14 @@ dict (``:115-119``), upsert with refreshed confidence (``:275-280``).
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.relational import following_profiles, pending_users
-from ..operators.writes import assign_dense_ids, upsert_keep_newest
+from ..operators.writes import upsert_keep_newest
+from ..schemas import INTEREST_CATEGORIES, INTERESTS
 from .categorizer import (
     MAIN_CATEGORIES,
     SUBCATEGORIES,
@@ -35,8 +37,6 @@ def default_categories(spark) -> DataFrame:
         sorted(SUBCATEGORIES.items()), start=len(MAIN_CATEGORIES) + 1
     ):
         rows.append((j, name, ids[parent], f"{name} (sub of {parent})"))
-    from ..schemas import INTEREST_CATEGORIES
-
     return spark.createDataFrame(rows, INTEREST_CATEGORIES)
 
 
@@ -81,17 +81,9 @@ def _categorize_edges(
     following that account (the reference analyzes per user; results are
     stored under the analyzed user's id, interest_analyzer.py:209,257-280).
     """
-    owners = (
-        edges.alias("e")
-        .join(users.alias("u"),
-              F.col("e.following_id") == F.col("u.user_id"), "inner")
-        .select(
-            F.col("e.user_id").alias("user_id"),
-            F.col("u.username").alias("username"),
-        )
-        .dropDuplicates(["user_id", "username"])
-    )
-    profiles = following_profiles(edges, users).dropDuplicates(["username"])
+    followed = following_profiles(edges, users)
+    owners = followed.select("user_id", "username").dropDuplicates()
+    profiles = followed.drop("user_id").dropDuplicates(["username"])
     results = categorize_following(profiles, categorizer)
     attributed = results.join(owners, "username", "inner").drop("username")
     return validate_results(attributed, interest_categories)
@@ -100,12 +92,14 @@ def _categorize_edges(
 def _upsert_interest_results(
     interests: DataFrame,
     validated: DataFrame,
-    ts,
-    next_id_start: int = 0,
-) -> DataFrame:
+    now: dt.datetime | None,
+) -> tuple[DataFrame | None, int]:
     """A1 tail of _store_interest_results (interest_analyzer.py:257-280):
     collapse per-key collisions, preserve SERIAL ids across the upsert,
-    mint fresh ids for new keys. Returns the merged interests table."""
+    mint fresh ids for new keys. Returns ``(merged, added)``: the merged
+    interests table (``None`` when there is nothing to write) and the
+    number of new keys. The model pass runs once, in ONE collect of the
+    <= pending users x 27 category keys with prev id and table max."""
     # The reference's per-row ON CONFLICT keeps the last-processed result
     # when several followed accounts land in the same (user, category);
     # its scan order is unspecified, so collapse deterministically to the
@@ -113,39 +107,35 @@ def _upsert_interest_results(
     collapsed = validated.groupBy("user_id", "category_id").agg(
         F.max("confidence_score").alias("confidence_score")
     )
-    incoming = collapsed.withColumn("created_at", ts)
-    if incoming.isEmpty():
-        return interests
-    # ON CONFLICT DO UPDATE preserves the row's SERIAL id: inherit the
-    # existing surrogate id per key, then mint fresh ids above the current
-    # max for brand-new keys. max(id) is a footer-stats scan; the dense
-    # row_number only runs over the new-key batch (≤ limit users × #cats).
+    # ON CONFLICT DO UPDATE preserves the row's SERIAL id
     prev_ids = interests.select(
         "user_id", "category_id", F.col("id").alias("_prev_id")
     )
-    incoming = (
-        incoming.join(prev_ids, ["user_id", "category_id"], "left")
-        .withColumn("id", F.col("_prev_id"))
-        .drop("_prev_id")
+    max_id = interests.agg(F.coalesce(F.max("id"), F.lit(0)).alias("_max_id"))
+    rows = (
+        collapsed.join(prev_ids, ["user_id", "category_id"], "left")
+        .crossJoin(F.broadcast(max_id))
+        .collect()
     )
-    if next_id_start <= 0:
-        max_id = interests.agg(F.max("id").alias("m")).first()["m"]
-        next_id_start = int(max_id or 0) + 1
-    have_id = incoming.filter(F.col("id").isNotNull())
-    need_id = assign_dense_ids(
-        incoming.filter(F.col("id").isNull()).drop("id"),
-        "id",
-        order_by=["user_id", "category_id"],
-        start=next_id_start,
+    if not rows:
+        return None, 0
+    # new keys get dense ids above the table max in (user_id,
+    # category_id) order (Python's str order is Spark's binary UTF-8 order)
+    rows.sort(key=lambda r: (r.user_id, r.category_id))
+    fresh = itertools.count(rows[0]._max_id + 1)
+    now = now or dt.datetime(2024, 1, 1)
+    incoming = interests.sparkSession.createDataFrame(
+        [(next(fresh) if r._prev_id is None else r._prev_id, r.user_id,
+          r.category_id, r.confidence_score, now) for r in rows],
+        INTERESTS,
     )
-    cols = ["id", "user_id", "category_id", "confidence_score", "created_at"]
-    incoming = have_id.select(*cols).unionByName(need_id.select(*cols))
-    return upsert_keep_newest(
+    merged = upsert_keep_newest(
         interests,
         incoming,
         keys=["user_id", "category_id"],
         order_col="created_at",
     )
+    return merged, sum(r._prev_id is None for r in rows)
 
 
 def analyze_user_interests(
@@ -156,18 +146,16 @@ def analyze_user_interests(
     username: str,
     categorizer: Categorizer | None = None,
     now: dt.datetime | None = None,
-    next_id_start: int = 0,
-) -> DataFrame:
+) -> tuple[DataFrame | None, int]:
     """The reference's public per-user entry point
     (``analyze_user_interests``, interest_analyzer.py:140-214): no pending
     gate — re-analyzing a user refreshes confidences in place, preserving
-    each row's surrogate id (ON CONFLICT DO UPDATE). Returns the merged
-    interests table contents."""
-    ts = F.lit(now or dt.datetime(2024, 1, 1)).cast("timestamp")
+    each row's surrogate id (ON CONFLICT DO UPDATE). Returns ``(merged,
+    added)`` as ``_upsert_interest_results`` does."""
     target = users.filter(F.col("username") == username).select("user_id")
     edges = following.join(target, "user_id", "left_semi")
     validated = _categorize_edges(users, edges, interest_categories, categorizer)
-    return _upsert_interest_results(interests, validated, ts, next_id_start)
+    return _upsert_interest_results(interests, validated, now)
 
 
 def analyze_pending_users(
@@ -179,12 +167,11 @@ def analyze_pending_users(
     categorizer: Categorizer | None = None,
     limit: int = 5,
     now: dt.datetime | None = None,
-    next_id_start: int = 0,
-) -> DataFrame:
+) -> tuple[DataFrame | None, int]:
     """The --mode analysis lifecycle (SURVEY §3.3): J3 pending anti-join
     -> J2 profile join -> U1 model batches -> U2 validation -> A1 upsert.
-    Returns the new interests table contents."""
-    ts = F.lit(now or dt.datetime(2024, 1, 1)).cast("timestamp")
+    Returns ``(merged, added)`` as ``_upsert_interest_results`` does;
+    ``merged`` is ``None`` when nothing was pending or categorized."""
     pending = pending_users(users, scrape_jobs, interests, limit=limit)
     # set-based version of the reference's per-user loop
     # (interest_analyzer.py:285-315): all pending users' following edges
@@ -193,4 +180,4 @@ def analyze_pending_users(
         pending.select("user_id"), "user_id", "left_semi"
     )
     validated = _categorize_edges(users, edges, interest_categories, categorizer)
-    return _upsert_interest_results(interests, validated, ts, next_id_start)
+    return _upsert_interest_results(interests, validated, now)

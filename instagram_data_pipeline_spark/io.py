@@ -17,6 +17,12 @@ Scale notes (100 TB):
 * Merged tables (``Warehouse.upsert_partitioned``) have one backend,
   :class:`~.formats.TransactionLogFormat`: bucket-scoped rewrites
   published by one crash-atomic manifest commit.
+* Reference tables (``Warehouse.overwrite_atomic``) are written once to
+  ``<table>.tmp`` and committed by renames ``<table>`` -> ``<table>.old``,
+  ``<table>.tmp`` -> ``<table>``; the second is the commit point, and
+  ``ensure_tables`` moves ``.old`` back when ``<table>`` is missing. A
+  crash leaves the whole old or new table where rename is atomic (local,
+  HDFS); on object stores a rename is a copy, as costly as a rewrite.
 """
 
 from __future__ import annotations
@@ -258,16 +264,6 @@ class JdbcBatchSink:
         self.epochs.add(epoch_id)
 
 
-def hadoop_rm(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — works on any
-    Spark-supported filesystem (HDFS/S3A/local), unlike ``shutil`` which
-    only touches the local FS."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -292,6 +288,12 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
+
+
+def _rename(fs, src, dst) -> None:
+    # Hadoop's rename reports failure by returning false
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
 
 
 class Warehouse:
@@ -321,8 +323,12 @@ class Warehouse:
         return p.exists() and any(p.iterdir())
 
     def ensure_tables(self, tables: dict[str, T.StructType] | None = None) -> None:
-        """CREATE TABLE IF NOT EXISTS analog (setup.py:27-127)."""
+        """CREATE TABLE IF NOT EXISTS analog (setup.py:27-127); first moves
+        back a ``<table>.old`` left by a crash between commit renames."""
         for name, schema in (tables or REFERENCE_TABLES).items():
+            fs, final, _, old = self._commit_paths(name)
+            if not fs.exists(final) and fs.exists(old):
+                _rename(fs, old, final)
             if not self.exists(name):
                 empty = self.spark.createDataFrame([], schema)
                 empty.write.mode("overwrite").parquet(self.path(name))
@@ -334,47 +340,43 @@ class Warehouse:
             reader = reader.schema(schema)
         return reader.parquet(self.path(table))
 
-    def write(
-        self,
-        table: str,
-        df: DataFrame,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(table))
+    def write(self, table: str, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(self.path(table))
+
+    def _commit_paths(self, table: str):
+        """``(fs, <table>, <table>.tmp, <table>.old)``, as Hadoop paths."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        final, tmp, old = (hpath(self.path(table) + x) for x in ("", ".tmp", ".old"))
+        fs = final.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs, final, tmp, old
 
     def overwrite_atomic(self, table: str, df: DataFrame) -> None:
-        """Replace a table's contents via temp-path swap.
+        """Replace a table's contents: write once, commit by rename.
 
-        Parquet overwrite deletes before it writes, so a plan that reads
-        the same table it overwrites would race its own input. Materialize
-        to ``<table>.tmp`` first, then swap.
-
-        "Atomic" here means atomic *with respect to the plan's own reads*,
-        NOT crash-atomic: a failure between the staged write and the final
-        overwrite (or mid-overwrite) leaves the table partially rewritten.
-        Plain Parquet has no commit protocol — a transactional table
-        format (Delta/Iceberg, whose MERGE/REPLACE is the real form of
-        this operation) is the production answer; this is the documented
-        no-table-format stand-in.
+        ``df`` may read the table it replaces, so it is written to
+        ``<table>.tmp`` first. The commit is two Hadoop FileSystem
+        renames, ``<table>`` -> ``<table>.old`` then ``<table>.tmp`` ->
+        ``<table>``; the second is the commit point, and ``.old`` is
+        deleted after it. A failed staged write leaves the table as it
+        was; a failed commit rename moves ``.old`` back at once; a crash
+        between the renames leaves it whole under ``.old``, which
+        ``ensure_tables`` moves back. Crash-atomic where rename is
+        atomic (local, HDFS); on object stores a rename is a copy.
         """
-        tmp = self.path(table) + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path(table))
-        # best-effort cleanup of the temp copy (FS-agnostic)
+        fs, final, tmp, old = self._commit_paths(table)
+        df.write.mode("overwrite").parquet(self.path(table) + ".tmp")
+        # a stale .old is left by a crash after an earlier commit point
+        fs.delete(old, True)
+        if fs.exists(final):
+            _rename(fs, final, old)
         try:
-            hadoop_rm(self.spark, tmp)
+            _rename(fs, tmp, final)
         except Exception:
-            pass
-
-    def register_views(self) -> None:
-        for name in REFERENCE_TABLES:
-            if self.exists(name):
-                self.read(name).createOrReplaceTempView(name)
+            # put the old table back so this process can still read it
+            if fs.exists(old) and not fs.exists(final):
+                _rename(fs, old, final)
+            raise
+        fs.delete(old, True)
 
     # -- A1 at scale: bucket-scoped MERGE on the transaction log --------
     def upsert_partitioned(

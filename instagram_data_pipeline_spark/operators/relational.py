@@ -25,7 +25,7 @@ def following_profiles(
 ) -> DataFrame:
     """Profiles of the accounts a user follows (edges -> vertices join).
 
-    SELECT u.username, u.full_name, u.bio
+    SELECT f.user_id, u.username, u.full_name, u.bio
     FROM following f JOIN users u ON f.following_id = u.user_id
     WHERE f.user_id = %s
     """
@@ -39,6 +39,7 @@ def following_profiles(
         .join(users.alias("u"), F.col("e.following_id") == F.col("u.user_id"),
               "inner")
         .select(
+            F.col("e.user_id").alias("user_id"),
             F.col("u.username").alias("username"),
             F.col("u.full_name").alias("full_name"),
             # P4: NULL bio -> '' (interest_analyzer.py:136)

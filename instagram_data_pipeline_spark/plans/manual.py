@@ -109,7 +109,8 @@ class Pipeline:
     # -- stage 5: interests (U1/U2 -> A1) ---------------------------------
     def analyze_interests(self, categorizer: Categorizer | None = None,
                           limit: int = 5) -> int:
-        merged = analyze_pending_users(
+        """Stage 5: returns the interest rows added; may write nothing."""
+        merged, added = analyze_pending_users(
             self.wh.read("users"),
             self.wh.read("following"),
             self.wh.read("scrape_jobs"),
@@ -119,9 +120,9 @@ class Pipeline:
             limit=limit,
             now=self.now,
         )
-        before = self.wh.read("interests").count()
-        self.wh.overwrite_atomic("interests", merged)
-        return self.wh.read("interests").count() - before
+        if merged is not None:
+            self.wh.overwrite_atomic("interests", merged)
+        return added
 
     # -- the 5-stage DAG --------------------------------------------------
     def run_manual(

@@ -7,13 +7,14 @@ marked in_progress/completed/failed on the SAME ledger row —
 exactly-once dequeue semantics instead of the reference's orphaned
 pending rows.
 
-The ledger is a tiny control table. A tick collects its <= batch_size
-dequeued rows once, runs the handlers, and applies every status change
-with ONE ``update_jobs`` call (a keyed join against a literal frame of
-the results) and one overwrite; a tick that dequeues nothing writes
-nothing. State that must be transactional at scale moves to a table
-format or the streaming checkpoint (SURVEY §2.9 T6) without changing
-this interface.
+The ledger is a tiny control table. A tick reads its <= batch_size
+dequeued rows and its quota (the status of <= daily_quota jobs started
+today) in one collect, runs the handlers, and applies every status
+change with ONE ``update_jobs`` call (a keyed join against a literal
+frame of the results) and one overwrite; a tick that dequeues nothing
+writes nothing. State that must be transactional at
+scale moves to a table format or the streaming checkpoint (SURVEY §2.9
+T6) without changing this interface.
 """
 
 from __future__ import annotations
@@ -120,18 +121,6 @@ class JobScheduler:
         self.wh.overwrite_atomic("scrape_jobs", jobs.unionByName(new_jobs))
         return len(rows)
 
-    # -- T3: daily quota (job_scheduler.py:29-47, 84-86) ------------------
-    def quota_used_today(self) -> int:
-        day = self.now.date()
-        return (
-            self._jobs()
-            .filter(
-                (F.to_date("started_at") == F.lit(day))
-                & F.col("status").isin("completed", "failed", "in_progress")
-            )
-            .count()
-        )
-
     # -- the tick (job_scheduler.py:79-154) -------------------------------
     def process_pending_jobs(
         self,
@@ -141,11 +130,21 @@ class JobScheduler:
         """One scheduler tick: quota gate -> O1 FIFO dequeue -> dispatch
         -> one ledger update -> T7 completeness trigger."""
         stats = {"dispatched": 0, "completed": 0, "failed": 0}
-        remaining = self.daily_quota - self.quota_used_today()
-        if remaining <= 0:
-            return stats
-        # <= batch_size control rows — driver-side by design
-        rows = dequeue_pending(self._jobs(), min(remaining, self.batch_size)).collect()
+        jobs = self._jobs()
+        # T3 quota + O1 FIFO dequeue in one collect: the <= batch_size
+        # oldest pending rows beside the status of <= daily_quota jobs
+        # started today (job_scheduler.py:29-47, 84-86)
+        started = jobs.filter(
+            (F.to_date("started_at") == F.lit(self.now.date()))
+            & F.col("status").isin("completed", "failed", "in_progress")
+        ).select("status").limit(self.daily_quota)
+        head = dequeue_pending(jobs, self.batch_size).unionByName(
+            started, allowMissingColumns=True
+        ).collect()
+        queue = sorted(
+            (r for r in head if r.status == "pending"), key=lambda r: r.job_id
+        )
+        rows = queue[: max(0, self.daily_quota - (len(head) - len(queue)))]
         if not rows:
             return stats
         updates = []
@@ -159,6 +158,7 @@ class JobScheduler:
                 updates.append((row.job_id, "completed", self.now, self.now, None))
                 stats["completed"] += 1
         stats["dispatched"] = len(rows)
+        # re-read: a handler may have written the ledger since
         self.wh.overwrite_atomic("scrape_jobs", update_jobs(
             self._jobs(),
             self.spark.createDataFrame(

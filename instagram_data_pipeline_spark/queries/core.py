@@ -907,7 +907,7 @@ WITH pc AS (
   SELECT o_custkey, o_orderpriority AS top_priority
   FROM (
     SELECT *, ROW_NUMBER() OVER (
-      PARTITION BY o_custkey ORDER BY c DESC, o_orderpriority
+      PARTITION BY o_custkey ORDER BY c DESC, o_orderpriority NULLS FIRST
     ) AS rn FROM pc
   ) WHERE rn = 1
 )
@@ -916,7 +916,7 @@ FROM (
   SELECT o_custkey, COUNT(*) AS n_orders, MAX(o_totalprice) AS max_price,
          MIN(epoch_us(o_orderdate)) AS first_order_us
   FROM orders GROUP BY o_custkey
-) g JOIN top ON g.o_custkey = top.o_custkey
+) g JOIN top ON g.o_custkey IS NOT DISTINCT FROM top.o_custkey
 """,
     doc="pandas UDAF (applyInPandas, one row per group) vs relational oracle",
     tags=("udaf", "pandas"),

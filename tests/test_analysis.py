@@ -121,7 +121,9 @@ def test_analysis_attributes_to_pending_user_and_drains(spark):
     interests = spark.createDataFrame([], INTERESTS)
     cats = fixture_categories(spark)
 
-    merged = analyze_pending_users(users, following, jobs, interests, cats, now=now)
+    merged, _ = analyze_pending_users(
+        users, following, jobs, interests, cats, now=now
+    )
     rows = merged.collect()
     # every interest row belongs to the analyzed pending user 12345
     assert rows and all(r.user_id == "12345" for r in rows)
@@ -155,9 +157,10 @@ def test_analysis_upsert_preserves_existing_ids(spark):
         [(7, "12345", 1, 0.11, dt.datetime(2024, 1, 1))], INTERESTS
     )
     cats = fixture_categories(spark)
-    merged = analyze_user_interests(
+    merged, _ = analyze_user_interests(
         users, following, interests, cats, "instagram", now=now
-    ).collect()
+    )
+    merged = merged.collect()
     by_key = {(r.user_id, r.category_id): r for r in merged}
     kept = by_key[("12345", 1)]
     assert kept.id == 7  # surrogate id preserved through the upsert
@@ -370,3 +373,80 @@ def test_customer_order_summary_matches_per_group_reference(spark, sf_dir):
         )
     )
     assert got == ref
+
+
+def test_customer_order_summary_keeps_null_keys(spark):
+    """NULL keys are groups, as in Spark's groupBy: a NULL o_custkey is
+    one customer, and a customer whose priorities are all NULL keeps its
+    row with a NULL top_priority. Checked against a Spark groupBy and
+    against the DuckDB oracle of the ``pandas_group_summary`` query."""
+    import datetime as dt
+
+    import duckdb
+    from pyspark.sql import Window
+
+    from instagram_data_pipeline_spark.analysis.group_summary import (
+        customer_order_summary,
+    )
+    from instagram_data_pipeline_spark.queries import load_all
+    from instagram_data_pipeline_spark.testing import compare_to_oracle
+
+    day = dt.date(1995, 3, 1)
+    orders = spark.createDataFrame(
+        [
+            (1, "1-URGENT", 10.0, day),
+            (1, "2-HIGH", 30.0, day + dt.timedelta(days=2)),
+            (1, "2-HIGH", 20.0, day + dt.timedelta(days=1)),
+            (None, "3-MEDIUM", 5.0, day),
+            (None, None, 7.0, day - dt.timedelta(days=3)),
+            (2, None, 4.0, day),
+            (2, None, 6.0, day + dt.timedelta(days=5)),
+            (3, None, 8.0, day),
+            (3, "5-LOW", 9.0, day),
+        ],
+        "o_custkey long, o_orderpriority string, o_totalprice double, "
+        "o_orderdate date",
+    )
+    pc = orders.groupBy("o_custkey", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    rank = Window.partitionBy("o_custkey").orderBy(
+        F.col("c").desc(), F.col("o_orderpriority").asc()
+    )
+    top = (
+        pc.withColumn("rn", F.row_number().over(rank))
+        .filter("rn = 1")
+        .select(F.col("o_custkey").alias("k"),
+                F.col("o_orderpriority").alias("top_priority"))
+    )
+    want = (
+        orders.groupBy("o_custkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.max("o_totalprice").alias("max_price"),
+            F.min(F.unix_micros(F.col("o_orderdate").cast("timestamp")))
+            .alias("first_order_us"),
+        )
+        .join(top, F.col("o_custkey").eqNullSafe(F.col("k")))
+    )
+    cols = ["o_custkey", "n_orders", "top_priority", "max_price",
+            "first_order_us"]
+
+    def key(r):
+        return tuple((v is None, v) for v in r)
+
+    got = sorted(map(tuple, customer_order_summary(orders).select(*cols)
+                     .collect()), key=key)
+    ref = sorted(map(tuple, want.select(*cols).collect()), key=key)
+    assert len(got) == 4  # customers 1, 2, 3 and the NULL customer
+    assert got == ref
+    by_cust = {r[0]: r for r in got}
+    assert by_cust[2][1:3] == (2, None)  # all-NULL priorities kept
+    assert by_cust[None][1] == 2
+    # count ties with a NULL priority (customer 3, the NULL customer)
+    # pick NULL: ascending order puts NULL first, in Spark and the oracle
+    assert by_cust[3][2] is None and by_cust[None][2] is None
+    con = duckdb.connect()
+    con.register("orders", orders.toPandas())
+    oracle = load_all()["pandas_group_summary"].oracle
+    assert not compare_to_oracle(customer_order_summary(orders), con, oracle)

@@ -36,6 +36,77 @@ def test_overwrite_atomic_self_read(spark, tmp_path):
     assert all(r.follower_count == 1 for r in wh.read("users").collect())
 
 
+def test_overwrite_atomic_crash_between_renames_restores_old(
+    spark, tmp_path
+):
+    """A crash after ``<table>`` -> ``<table>.old`` and before
+    ``<table>.tmp`` -> ``<table>`` leaves the old table whole; building
+    a Pipeline (ensure_tables) moves it back."""
+    import os
+
+    from instagram_data_pipeline_spark.plans.manual import Pipeline
+
+    root = tmp_path / "wh"
+    wh = Warehouse(spark, str(root))
+    wh.ensure_tables()
+    users = fixture_users(spark)
+    wh.overwrite_atomic("users", users)
+    assert not os.path.exists(wh.path("users") + ".old")
+    os.rename(wh.path("users"), wh.path("users") + ".old")
+    users.limit(1).write.parquet(wh.path("users") + ".tmp")  # stale stage
+    pipe = Pipeline(spark, str(root))
+    assert sorted(map(tuple, pipe.wh.read("users").collect())) == sorted(
+        map(tuple, users.collect())
+    )
+    assert not os.path.exists(wh.path("users") + ".old")
+
+
+def test_overwrite_atomic_failed_stage_keeps_table(spark, tmp_path):
+    """A staged write that fails leaves the table's old contents in
+    place and readable."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.ensure_tables()
+    users = fixture_users(spark)
+    wh.overwrite_atomic("users", users)
+    boom = F.udf(lambda _: 1 // 0, "int")
+    with pytest.raises(Exception):
+        wh.overwrite_atomic(
+            "users", wh.read("users").withColumn("follower_count", boom("bio"))
+        )
+    assert sorted(map(tuple, wh.read("users").collect())) == sorted(
+        map(tuple, users.collect())
+    )
+
+
+def test_overwrite_atomic_failed_commit_rename_restores_old(
+    spark, tmp_path, monkeypatch
+):
+    """When the commit rename ``<table>.tmp`` -> ``<table>`` fails, the
+    old table is moved back at once and stays readable."""
+    import os
+
+    from instagram_data_pipeline_spark import io
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.ensure_tables()
+    users = fixture_users(spark)
+    wh.overwrite_atomic("users", users)
+    rename = io._rename
+
+    def failing_commit(fs, src, dst):
+        if str(src).endswith(".tmp"):
+            raise OSError("simulated failed commit rename")
+        rename(fs, src, dst)
+
+    monkeypatch.setattr(io, "_rename", failing_commit)
+    with pytest.raises(OSError):
+        wh.overwrite_atomic("users", users.limit(1))
+    assert sorted(map(tuple, wh.read("users").collect())) == sorted(
+        map(tuple, users.collect())
+    )
+    assert not os.path.exists(wh.path("users") + ".old")
+
+
 @pytest.mark.parametrize("fmt", ["parquet", "json", "csv", "orc"])
 def test_format_roundtrip(spark, tmp_path, fmt):
     users = fixture_users(spark).select(

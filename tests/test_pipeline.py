@@ -56,6 +56,57 @@ def test_manual_dag_end_to_end(spark, pipeline):
     assert stats["interests"] >= 3 and interests.count() >= 3
 
 
+def test_analyze_interests_runs_the_model_once_per_profile(
+    spark, pipeline, tmp_path
+):
+    """One analyze_interests call sends each followed profile of the
+    pending users to the categorizer exactly once."""
+    from instagram_data_pipeline_spark.analysis.categorizer import (
+        KeywordCategorizer,
+    )
+    from instagram_data_pipeline_spark.schemas import SCRAPE_JOBS
+
+    log = str(tmp_path / "seen.txt")
+
+    class Recording(KeywordCategorizer):
+        # appends from every Python worker land in the one file
+        def categorize(self, records):
+            with open(log, "a") as fh:
+                fh.writelines(r["username"] + "\n" for r in records)
+            return super().categorize(records)
+
+    _, following = fixture_edges(spark)
+    pipeline.upsert_profiles(fixture_users(spark))
+    pipeline.append_edges("following", following, "following_id")
+    pipeline.wh.overwrite_atomic("scrape_jobs", spark.createDataFrame(
+        [(1, "instagram", "following", "completed", NOW, NOW, None, 4, 4,
+          None)],
+        SCRAPE_JOBS,
+    ))
+    added = pipeline.analyze_interests(Recording())
+    with open(log) as fh:
+        seen = fh.read().split()
+    assert seen and len(seen) == len(set(seen))
+    followed = {
+        r.following_id for r in following.filter("user_id = '12345'")
+        .select("following_id").distinct().collect()
+    }
+    names = {
+        r.username for r in pipeline.wh.read("users")
+        .filter(F.col("user_id").isin(*followed)).collect()
+    }
+    assert set(seen) == names
+    assert added == pipeline.wh.read("interests").count() >= 3
+
+
+def test_analyze_interests_nothing_pending_writes_nothing(spark, pipeline):
+    pipeline.upsert_profiles(fixture_users(spark))
+    path = pipeline.wh.path("interests")
+    before = sorted(os.listdir(path))
+    assert pipeline.analyze_interests() == 0
+    assert sorted(os.listdir(path)) == before
+
+
 def test_manual_dag_idempotent(spark, pipeline):
     users = fixture_users(spark)
     followers, following = fixture_edges(spark)

@@ -76,7 +76,12 @@ _COLLECT_ALLOWLIST: dict[str, tuple[int, str]] = {
     "plans/scheduler.py": (3, "control plane: <=3 enqueue rows per "
                               "username (ledger max attached) + "
                               "<=batch_size dequeued ledger rows + "
+                              "<=daily_quota one-column started-today "
+                              "rows (the quota) + "
                               "<=batch_size both-complete usernames"),
+    "analysis/interests.py": (1, "<= limit pending users x 27 "
+                                 "categories, prev id and table max "
+                                 "attached"),
     "extensions/bpe.py": (1, "one argmax row per merge round, bounded by "
                              "n_merges"),
     "operators/bloom.py": (1, "<= n_bits/64 bitmap words"),
